@@ -33,10 +33,15 @@ object Aggregate {
 
   /** Partition-scoped by study: a batch's merge reads and rewrites only
     * the `study_id=` partitions it touches (see
-    * [[Warehouse.mergeReplacePartitions]]). */
-  def mergeIntoWarehouse(wh: Warehouse, incoming: DataFrame): Unit =
+    * [[Warehouse.mergeReplacePartitions]]). `studies` must be exactly the
+    * distinct `study_id`s of `incoming` — for a job's own rollups,
+    * [[Stage.Scan.valueNumStudies]] — so the merge rewrites the same
+    * partitions as if it had collected them itself. */
+  def mergeIntoWarehouse(wh: Warehouse, incoming: DataFrame,
+                         studies: Seq[String]): Unit =
     wh.mergeReplacePartitions("measurement_aggregations", Schemas.aggregations,
       incoming, partitionCols = Seq("study_id"),
+      partitionValues = Map("study_id" -> studies),
       combine = (old, nw) => {
         val keys = Schemas.aggregationKey
         old.join(nw, keys, "full_outer").select(

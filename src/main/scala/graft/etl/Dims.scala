@@ -17,11 +17,17 @@ import graft.schema.Schemas
   */
 object Dims {
 
-  def upsertForJob(wh: Warehouse, jobStaging: DataFrame): Unit = {
-    val newStudies = jobStaging.select("study_id").distinct()
-    wh.appendIfAbsent("studies", Schemas.studies,
-      newStudies, Seq("study_id"), orderCol = "study_id")
+  /** `studies` as an idempotent append of the job's distinct `study_id`s
+    * (known from the input pass, [[Stage.Scan.studies]], so no distinct
+    * shuffle); the caller lands it together with the job's other
+    * append-if-absent sinks ([[Warehouse.appendIfAbsentMany]]). */
+  def studiesAppend(wh: Warehouse, studies: Seq[String]): wh.Append = {
+    import wh.spark.implicits._
+    wh.Append("studies", Schemas.studies, studies.toDF("study_id"), Seq("study_id"),
+      orderCol = "study_id", dedupWithinBatch = false)
+  }
 
+  def upsertParticipants(wh: Warehouse, jobStaging: DataFrame): Unit = {
     // DISTINCT like the reference; if one job carries two sites for the
     // same participant Postgres would abort ("cannot affect row a second
     // time") — we resolve deterministically to max(site_id) instead.

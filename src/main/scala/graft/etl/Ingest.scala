@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.schema.Schemas
 
@@ -43,7 +43,7 @@ object Ingest {
   /** JSON-lines ingest under the same contract. The schema is forced (one
     * string field per contract column), so a column missing from the file
     * surfaces as nulls rather than an absent column; the blank-`study_id`
-    * gate still rejects files without the key column. */
+    * rule still rejects files without the key column. */
   def readJson(spark: SparkSession, path: String): DataFrame = {
     val df = spark.read
       .schema(Schemas.measurementCsv)
@@ -69,7 +69,11 @@ object Ingest {
       case other => throw ContractViolation(s"unsupported ingest format: $other")
     }
 
-  /** S2/S3/P1/P2 on an already-loaded all-string frame. */
+  /** S2/P1/P2 on an already-loaded all-string frame: the column contract
+    * and normalization. Runs no Spark action; the row-level rules (S3's
+    * blank `study_id`, the junk `quality_score`) are counted by the
+    * pipeline's one input pass ([[Stage.scan]]) and raised by
+    * [[Stage.Scan.requireValid]]. */
   def validateContract(raw: DataFrame): DataFrame = {
     val missing = Schemas.RequiredColumns.filterNot(raw.columns.contains)
     if (missing.nonEmpty)
@@ -77,11 +81,16 @@ object Ingest {
     val withOptional =
       if (raw.columns.contains("quality_score")) raw
       else raw.withColumn("quality_score", lit(""))
-    val df = withOptional.withColumn("unit", trim(col("unit")))
-    // single validation pass over the file: blank study_id anywhere -> reject
-    val blankStudy = df.filter(coalesce(trim(col("study_id")), lit("")) === "").limit(1).count()
-    if (blankStudy > 0)
-      throw ContractViolation("study_id is required for all rows and cannot be blank")
-    df
+    withOptional.withColumn("unit", trim(col("unit")))
   }
+
+  /** S3: a row whose `study_id` is null or blank rejects the whole file. */
+  val blankStudy: Column = coalesce(trim(col("study_id")), lit("")) === ""
+
+  val BlankStudyMessage = "study_id is required for all rows and cannot be blank"
+
+  /** Junk `quality_score` fails the job like the reference's `float()`
+    * raising (`etl.py:93` + `:264-266`). */
+  def junkScoreMessage(score: String): String =
+    s"could not convert string to float: '$score'"
 }

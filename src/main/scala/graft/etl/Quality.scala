@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.expr.ClinicalCols._
 import graft.schema.Schemas
@@ -19,15 +19,21 @@ import graft.schema.Schemas
   *     /_2` range entries never match a raw `measurement_type`, so raw BP
   *     rows can't be out-of-range (faithful to `etl.py:181-194`).
   *
-  * One aggregation pass, no shuffle beyond the final single-row reduce;
-  * the RANGES lookup is inlined as a chained expression (7 entries), which
+  * The rules are plain predicates ([[ReferenceRules]]): the pipeline
+  * counts them inside its one input pass instead of a pass of their own.
+  * The RANGES lookup is inlined as a chained expression (7 entries), which
   * keeps everything in whole-stage codegen rather than broadcasting a join.
   */
 object Quality {
 
-  def ruleCounts(spark: SparkSession, raw: DataFrame, jobId: String): DataFrame = {
-    import spark.implicits._
+  /** A named per-row predicate; a rule is violated by the rows it holds
+    * for. */
+  final case class Rule(name: String, severity: String, violatedWhen: Column)
 
+  /** The reference's three rules, in report order. Each is a per-row
+    * predicate, so their counts can ride any aggregation pass over the
+    * raw frame (the pipeline's input pass, [[Stage.scan]]). */
+  val ReferenceRules: Seq[Rule] = {
     // pandas reads a blank unit as "" (keep_default_na=False); Spark's CSV
     // reader yields null for an unquoted empty field — treat both as blank
     val missingUnit =
@@ -38,26 +44,32 @@ object Quality {
       col("measurement_type") === "blood_pressure" &&
         bpSystolic(col("value")).isNull
 
+    // the RANGES types are distinct, so a row matches at most one entry:
+    // OR-ing the per-type tests counts exactly what summing them did
     val num = toDecimal(col("value"))
     val outOfRange = Schemas.Ranges.map { case (mtype, low, high) =>
-      when(col("measurement_type") === mtype && num.isNotNull &&
-        (num < lit(low) || num > lit(high)), 1L).otherwise(0L)
-    }.reduce(_ + _)
+      col("measurement_type") === mtype && num.isNotNull &&
+        (num < lit(low) || num > lit(high))
+    }.reduce(_ || _)
 
-    val counts = raw.agg(
-      sum(when(missingUnit, 1L).otherwise(0L)).as("missing_unit_required"),
-      sum(when(malformedBp, 1L).otherwise(0L)).as("malformed_blood_pressure"),
-      sum(outOfRange).as("numeric_out_of_range")).head()
+    Seq(
+      Rule("missing_unit_required", "warn", missingUnit),
+      Rule("malformed_blood_pressure", "error", malformedBp),
+      Rule("numeric_out_of_range", "warn", outOfRange))
+  }
 
-    def at(i: Int): Long = if (counts.isNullAt(i)) 0L else counts.getLong(i)
-    val rules = Seq(
-      ("missing_unit_required", "warn", at(0)),
-      ("malformed_blood_pressure", "error", at(1)),
-      ("numeric_out_of_range", "warn", at(2)))
-      .filter(_._3 > 0) // emit-if-positive, etl.py:165,177,192
-      .map { case (rule, sev, n) => (jobId, rule, sev, n) }
+  /** One violation-count column per rule, named after it. */
+  def countColumns(rules: Seq[Rule]): Seq[Column] =
+    rules.map(r => sum(when(r.violatedWhen, 1L).otherwise(0L)).as(r.name))
 
-    rules.toDF("job_id", "rule_name", "severity", "affected_rows")
+  /** Report rows for per-rule counts given in `rules` order, emitted only
+    * for positive counts (etl.py:165,177,192). */
+  def reports(spark: SparkSession, rules: Seq[Rule], counts: Seq[Long],
+              jobId: String): DataFrame = {
+    import spark.implicits._
+    rules.zip(counts)
+      .collect { case (r, n) if n > 0 => (jobId, r.name, r.severity, n) }
+      .toDF("job_id", "rule_name", "severity", "affected_rows")
   }
 
   def landReports(wh: Warehouse, reports: DataFrame): Unit =
@@ -79,27 +91,18 @@ object Quality {
         reports, keys = Seq("job_id", "rule_name"), orderCol = "rule_name",
         dedupWithinBatch = false)
 
-  /** Generic rule engine the reference-specific counts above are an
-    * instance of: declare named per-row predicates, get one report row
-    * per violated rule. ALL rules evaluate in a single aggregation pass
-    * (one `sum(when(...))` per rule, partial-combined map-side) — adding
-    * a rule never adds a scan, which is what keeps a 50-rule suite
-    * viable over a 100 TB table. */
-  final case class Rule(name: String, severity: String, violatedWhen:
-      org.apache.spark.sql.Column)
-
+  /** Generic rule engine the reference rules above are an instance of:
+    * declare named per-row predicates, get one report row per violated
+    * rule. ALL rules evaluate in a single aggregation pass (one
+    * `sum(when(...))` per rule, partial-combined map-side) — adding a rule
+    * never adds a scan, which is what keeps a 50-rule suite viable over a
+    * 100 TB table. */
   def check(spark: SparkSession, df: DataFrame, rules: Seq[Rule],
             jobId: String): DataFrame = {
-    import spark.implicits._
     require(rules.nonEmpty, "no rules given")
-    val counts = df.agg(
-      sum(when(rules.head.violatedWhen, 1L).otherwise(0L)).as(rules.head.name),
-      rules.tail.map(r =>
-        sum(when(r.violatedWhen, 1L).otherwise(0L)).as(r.name)): _*).head()
-    rules.zipWithIndex
-      .map { case (r, i) =>
-        (jobId, r.name, r.severity, if (counts.isNullAt(i)) 0L else counts.getLong(i)) }
-      .filter(_._4 > 0)
-      .toDF("job_id", "rule_name", "severity", "affected_rows")
+    val sums = countColumns(rules)
+    val counts = df.agg(sums.head, sums.tail: _*).head()
+    reports(spark, rules,
+      rules.indices.map(i => if (counts.isNullAt(i)) 0L else counts.getLong(i)), jobId)
   }
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.expr.ClinicalCols.toDecimal
 import graft.schema.Schemas
@@ -23,6 +23,16 @@ import graft.schema.Schemas
   */
 object Transform {
 
+  private def validBp(mtype: Column, systolic: Column): Column =
+    mtype === "blood_pressure" && systolic.isNotNull
+
+  /** Whether a row routes to `value_num` observations in [[processedRows]]
+    * (a valid BP split or a decimal value) rather than to one `value_text`
+    * row: the test that decides which studies a job's aggregates touch. */
+  def yieldsValueNum(mtype: Column, value: Column): Column =
+    validBp(mtype, graft.expr.ParseBloodPressure(value).getField("systolic")) ||
+      toDecimal(value).isNotNull
+
   def processedRows(staged: DataFrame): DataFrame = {
     // Parse ONCE in a projection ahead of the Generate: the generator
     // expression gets no subexpression elimination, so inlining the parse
@@ -40,7 +50,7 @@ object Transform {
       lit(null).cast("string").as("value_text"),
       col("unit").as("o_unit"))
 
-    val rows = when(col("measurement_type") === "blood_pressure" && col("__sys").isNotNull,
+    val rows = when(validBp(col("measurement_type"), col("__sys")),
         array(
           struct(lit("blood_pressure_systolic").as("m_type"),
             col("__sys").cast(Schemas.ValueDecimal).as("value_num"),
@@ -75,10 +85,15 @@ object Transform {
 
   /** S5: land processed rows with cross-job observation dedup on
     * `uq_pm_obs` (study, participant, type, measured_at, site); first
-    * occurrence in file order wins within a batch. */
-  def landInProcessed(wh: Warehouse, processed: DataFrame): Long =
-    wh.appendIfAbsent("processed_measurements", Schemas.processed,
+    * occurrence in file order wins within a batch. `studies` must be
+    * exactly the batch's distinct `study_id`s ([[Stage.Scan.studies]]):
+    * the anti-join then reads only those partitions without a job of its
+    * own to find them. */
+  def processedAppend(wh: Warehouse, processed: DataFrame,
+                      studies: Seq[String]): wh.Append =
+    wh.Append("processed_measurements", Schemas.processed,
       processed,
       Schemas.processedKey, orderCol = "row_num",
-      partitionBy = Seq("study_id"))
+      partitionBy = Seq("study_id"),
+      partitionValues = Map("study_id" -> studies))
 }

@@ -806,16 +806,19 @@ final class Warehouse(private[graft] val spark: SparkSession,
       partitionBy, dedupWithinBatch))).head
 
   /** One table's worth of [[appendIfAbsent]] arguments, for the
-    * multi-table form. */
+    * multi-table form. `partitionValues` optionally gives, per partition
+    * column, the exact distinct values `df` holds (see
+    * [[prunedToIncoming]]). */
   case class Append(table: String, schema: StructType, df: DataFrame,
                     keys: Seq[String], orderCol: String,
                     partitionBy: Seq[String] = Nil,
-                    dedupWithinBatch: Boolean = true)
+                    dedupWithinBatch: Boolean = true,
+                    partitionValues: Map[String, Seq[Any]] = Map.empty)
 
   /** Multi-table [[appendIfAbsent]]: every table's staged frame (deduped
-    * + anti-joined) is materialized and counted in ONE tagged-union
-    * Spark action instead of one count job per table, then each
-    * non-empty staging writes its own generation — so a micro-batch
+    * + anti-joined) is cached in ONE tagged union, materialized and
+    * counted in ONE Spark action instead of one count job per table, then
+    * each non-empty staging writes its own generation — so a micro-batch
     * transaction appending to two sinks pays one staging job, not two
     * (the per-batch action count is the streaming frame's fixed cost).
     * Per-table semantics are [[appendIfAbsent]]'s exactly — the
@@ -833,7 +836,7 @@ final class Warehouse(private[graft] val spark: SparkSession,
       case t :: rest => withTableLock(t)(locked(rest)(f))
     }
     locked(appends.map(_.table).sorted.toList) {
-      val staged = appends.map { a =>
+      val fresh = appends.map { a =>
         val keyCols = a.keys.map(col)
         val firstPerKey = if (!a.dedupWithinBatch) a.df else
           // keep-FIRST by orderCol, like Postgres keeping the first
@@ -848,45 +851,56 @@ final class Warehouse(private[graft] val spark: SparkSession,
               col(a.orderCol)).as("__first"))
             .select(col("__first.*"))
         val deduped = firstPerKey.select(a.schema.fieldNames.toSeq.map(col): _*)
-        val fresh =
-          if (!exists(a.table)) deduped
-          else deduped.join(
-            prunedToIncoming(read(a.table, a.schema), deduped,
-              a.partitionBy.filter(a.keys.contains)).select(keyCols: _*),
-            a.keys, "left_anti")
-        fresh.cache()
+        if (!exists(a.table)) deduped
+        else deduped.join(
+          prunedToIncoming(read(a.table, a.schema), deduped,
+            a.partitionBy.filter(a.keys.contains), a.partitionValues)
+            .select(keyCols: _*),
+          a.keys, "left_anti")
       }
-      // ONE action materializes every staged cache and counts what
-      // landed per table (tag = position, so table names never have to
-      // be distinct-safe strings in the plan)
-      val counts: Map[Int, Long] =
-        staged.zipWithIndex
-          .map { case (s, i) => s.select(lit(i).as("__t")) }
-          .reduce(_ unionByName _)
-          .groupBy("__t").count().collect()
-          .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      appends.zip(staged).zipWithIndex.map { case ((a, s), i) =>
-        val n = counts.getOrElse(i, 0L)
-        if (n > 0) {
-          // Bound the generation's file count by what the batch actually
-          // holds: micro-batch appends run with AQE disabled (foreachBatch
-          // plans), so a small batch would otherwise land one near-empty
-          // file per shuffle partition — a day of micro-batches explodes
-          // the table into thousands of tiny files that every later read
-          // (including this method's own anti-join) must list and open.
-          // Rows-per-file is a proxy for bytes (optimizeTable remains the
-          // real compactor); a large batch keeps its full parallelism —
-          // coalesce never increases partition count, so no cap against
-          // the actual count is needed — and coalesce on the cached frame
-          // is narrow: no shuffle.
-          val target = math.max(1L, (n + AppendRowsPerFile - 1) / AppendRowsPerFile)
-          append(a.table,
-            s.coalesce(math.min(target, Int.MaxValue.toLong).toInt),
-            a.partitionBy)
+      // ONE cached tagged union stages every table's rows (tag = position,
+      // so table names never have to be distinct-safe strings in the
+      // plan; table i's row rides in struct column __s<i>), so one cache
+      // materializes for all tables, and ONE action counts what lands per
+      // table: per-partition tallies, summed after the collect: no shuffle
+      val staged = fresh.zipWithIndex
+        .map { case (f, i) =>
+          f.select(lit(i).as("__t"), struct(f.columns.toSeq.map(col): _*).as(s"__s$i")) }
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+        .cache()
+      try {
+        val k = appends.size
+        val counts = staged.select("__t")
+          .mapPartitions { rows =>
+            val c = new Array[Long](k)
+            rows.foreach(r => c(r.getInt(0)) += 1)
+            Iterator.single(c)
+          }(spark.implicits.newLongArrayEncoder)
+          .collect()
+          .foldLeft(new Array[Long](k))((acc, c) => acc.zip(c).map { case (x, y) => x + y })
+        appends.zipWithIndex.map { case (a, i) =>
+          val n = counts(i)
+          if (n > 0) {
+            // Bound the generation's file count by what the batch actually
+            // holds: micro-batch appends run with AQE disabled (foreachBatch
+            // plans), so a small batch would otherwise land one near-empty
+            // file per shuffle partition — a day of micro-batches explodes
+            // the table into thousands of tiny files that every later read
+            // (including this method's own anti-join) must list and open.
+            // Rows-per-file is a proxy for bytes (optimizeTable remains the
+            // real compactor); a large batch keeps its full parallelism —
+            // coalesce never increases partition count, so no cap against
+            // the actual count is needed — and coalesce on the cached frame
+            // is narrow: no shuffle.
+            val target = math.max(1L, (n + AppendRowsPerFile - 1) / AppendRowsPerFile)
+            append(a.table,
+              staged.filter(col("__t") === i).select(col(s"__s$i.*"))
+                .coalesce(math.min(target, Int.MaxValue.toLong).toInt),
+              a.partitionBy)
+          }
+          n
         }
-        s.unpersist()
-        n
-      }
+      } finally staged.unpersist()  // released also when a write throws
     }
   }
 
@@ -913,15 +927,19 @@ final class Warehouse(private[graft] val spark: SparkSession,
   /** Restrict `existing` to the partition values present in `incoming` —
     * the anti-join/merge scan then prunes to only the directories a batch
     * can possibly conflict with. Valid whenever the partition columns are
-    * part of the conflict key (same key => same partition). The distinct
-    * partition values are collected to the driver: they are bounded by
-    * the batch's partition count (a handful of studies), never by data
-    * size. */
+    * part of the conflict key (same key => same partition). A column's
+    * values come from `known` when the caller already has them (a job's
+    * input pass learns its studies); otherwise they are collected in a
+    * job of their own. Either way they are bounded by the
+    * batch's partition count (a handful of studies), never by data size.
+    * Known values must be exact: a merge rewrites every partition they
+    * name. */
   private def prunedToIncoming(existing: DataFrame, incoming: DataFrame,
-                               pruneCols: Seq[String]): DataFrame =
+                               pruneCols: Seq[String],
+                               known: Map[String, Seq[Any]]): DataFrame =
     pruneCols.foldLeft(existing) { (d, c) =>
-      val vals = incoming.select(col(c)).distinct().collect()
-        .map(_.get(0)).toIndexedSeq
+      val vals = known.getOrElse(c, incoming.select(col(c)).distinct().collect()
+        .map(_.get(0)).toIndexedSeq)
       d.filter(col(c).isin(vals: _*))
     }
 
@@ -932,18 +950,23 @@ final class Warehouse(private[graft] val spark: SparkSession,
     * the property that keeps a nightly merge touching one study's data
     * from rewriting a 100 TB warehouse. Requires the partition columns
     * to be part of the merge key semantics (same key => same partition),
-    * which holds for every warehouse table here.
+    * which holds for every warehouse table here. `partitionValues`, when
+    * given, must be exactly the incoming batch's distinct values (see
+    * [[prunedToIncoming]]).
     */
   def mergeReplacePartitions(table: String, schema: StructType,
                              incoming: DataFrame,
                              combine: (DataFrame, DataFrame) => DataFrame,
-                             partitionCols: Seq[String]): Unit = withTableLock(table) {
+                             partitionCols: Seq[String],
+                             partitionValues: Map[String, Seq[Any]] = Map.empty
+                            ): Unit = withTableLock(table) {
     require(partitionCols.nonEmpty, "use mergeReplace for unpartitioned tables")
     currentDir(table) match {
       case None =>
         replace(table, incoming.select(schema.fieldNames.toSeq.map(col): _*), partitionCols)
       case Some(cur) =>
-        val scoped = prunedToIncoming(read(table, schema), incoming, partitionCols)
+        val scoped = prunedToIncoming(read(table, schema), incoming, partitionCols,
+          partitionValues)
         val merged = combine(scoped.alias("old"), incoming.alias("new"))
           .select(schema.fieldNames.toSeq.map(col): _*)
         val tmp = tableRoot(table).resolve(".merge-tmp")

@@ -12,11 +12,10 @@ import graft.schema.Schemas
   * asynchronously processed batch (`etl-service/src/main.py:47-69`), with
   * incrementality living entirely in the sinks (idempotent appends S4/S5,
   * cross-batch merge S7). The idiomatic Spark lowering is a file-source
-  * stream over a landing directory with `foreachBatch` running the exact
-  * same batch stages per micro-batch — `foreachBatch` is the canonical
-  * home for upsert sinks, and reusing [[Stage]]/[[Dims]]/[[Transform]]/
-  * [[Quality]]/[[Aggregate]] keeps streaming and batch semantics
-  * identical by construction.
+  * stream over a landing directory with `foreachBatch` running the batch
+  * job body ([[Pipeline.runJob]]) per file — `foreachBatch` is the
+  * canonical home for upsert sinks, and one body keeps streaming and batch
+  * semantics identical by construction.
   *
   * Each file in a micro-batch is processed as its own job (the
   * reference's unit of work), with `job id = file name` — so a file
@@ -58,40 +57,19 @@ final class StreamingPipeline(spark: SparkSession, wh: Warehouse,
       .start()
   }
 
-  /** One micro-batch: enumerate the batch's source files, run the six
-    * batch stages per file under `job id = file name`. */
+  /** One micro-batch: enumerate the batch's source files and run each as
+    * its own job under `job id = "stream-" + file name`, through the batch
+    * job body ([[Pipeline.runJob]]). Only the report sink differs: stream
+    * job ids are deterministic per file, so a replayed micro-batch would
+    * duplicate the report rows through the plain append — reports land
+    * keyed append-if-absent instead. A failing file marks its own job
+    * failed; the stream goes on. */
   private[stream] def processBatch(batch: DataFrame): Unit = {
     val files = batch.select(input_file_name().as("f")).distinct()
       .collect().map(_.getString(0))
     files.sorted.foreach { file =>
       val name = file.substring(file.lastIndexOf('/') + 1)
-      processFile(file, name)
-    }
-  }
-
-  private def processFile(path: String, filename: String): Unit = {
-    val jobId = s"stream-$filename"
-    try {
-      pipeline.markStatus(jobId, "running", Some("processing micro-batch"), Some(filename))
-      val validated = Ingest.readCsv(spark, path)
-      val withIds = Stage.assignRowIds(validated).cache()
-      try {
-        val stagingRows = Stage.toStagingRows(withIds, jobId, filename)
-        Stage.landInStaging(wh, stagingRows)
-        Dims.upsertForJob(wh, stagingRows)
-        val processed = Transform.processedRows(stagingRows)
-        Transform.landInProcessed(wh, processed)
-        // the one non-idempotent sink under redelivery: stream job ids
-        // are deterministic per file, so a replayed micro-batch would
-        // duplicate the report rows through the plain append
-        Quality.landReportsIfAbsent(wh,
-          Quality.ruleCounts(spark, withIds, jobId))
-        Aggregate.mergeIntoWarehouse(wh, Aggregate.buildForJob(processed, jobId))
-        pipeline.markStatus(jobId, "completed", None, Some(filename))
-      } finally withIds.unpersist()
-    } catch {
-      case e: Exception =>
-        pipeline.markStatus(jobId, "failed", Option(e.getMessage), Some(filename))
+      pipeline.runJob(s"stream-$name", file, name, "csv", Quality.landReportsIfAbsent)
     }
   }
 }

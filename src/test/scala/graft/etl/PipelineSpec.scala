@@ -245,4 +245,170 @@ class PipelineSpec extends SparkSpec {
     assert(pipe.jobStatus("123e4567-e89b-12d3-a456-4266141740zz").isEmpty) // non-hex
     assert(pipe.jobStatus("123e4567-e89b-12d3-a456-426614174000").isEmpty) // valid shape, absent
   }
+
+  /** Reference-shaped 12-row job over two studies: numeric, BP-split and
+    * text rows, with planted rule violations (2 missing units, 1 malformed
+    * BP, 1 out of range). */
+  private val twelveRows: String =
+    s"""${Fixtures.header}
+       |STUDYA,P001,glucose,95.5,mg/dL,2024-01-15T09:30:00Z,SITE_A,0.98
+       |STUDYA,P001,blood_pressure,120/80,mmHg,2024-01-15T09:31:00Z,SITE_A,0.97
+       |STUDYA,P002,heart_rate,72,bpm,2024-01-15T10:00:00Z,SITE_A,
+       |STUDYA,P002,weight,82.5,kg,2024-01-15T10:01:00Z,SITE_A,null
+       |STUDYA,P003,glucose,100.0,,2024-01-15T11:00:00Z,SITE_A,0.9
+       |STUDYA,P003,blood_pressure,120-80,mmHg,2024-01-15T11:01:00Z,SITE_A,0.9
+       |STUDYB,P101,cholesterol,180.5,mg/dL,2024-01-16T09:00:00Z,SITE_B,0.95
+       |STUDYB,P101,glucose,1000,mg/dL,2024-01-16T09:01:00Z,SITE_B,0.95
+       |STUDYB,P102,height,175.0,,2024-01-16T10:00:00Z,SITE_B,0.99
+       |STUDYB,P102,note,fasting,,2024-01-16T10:01:00Z,SITE_B,
+       |STUDYB,P103,blood_pressure,135/90,mmHg,2024-01-16T11:00:00Z,SITE_B,0.93
+       |STUDYB,P103,weight,70.25,kg,2024-01-16T11:01:00Z,SITE_B,0.96
+       |""".stripMargin
+
+  // Spark jobs of one warmed 12-row job (local[4]): running status (2),
+  // CSV header (1), input pass (2), the fused staging/studies/processed
+  // count (8) and its two writes (2), participants merge (3), quality
+  // report append (1), aggregate merge (3) and completed status (1). A
+  // probe action added anywhere fails this spec.
+  private val JobBudget = 23
+
+  test("a warmed 12-row job stays within its Spark-job budget") {
+    val (pipe, _) = freshPipeline()
+    assert(pipe.processJob("warm", csv("warm.csv", twelveRows)).status == "completed")
+    // new observations (shifted dates) so every sink lands rows again
+    val next = twelveRows.replace("2024-01-", "2024-02-")
+    val path = csv("next.csv", next)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val res = pipe.processJob("measured", path)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      assert(res.status == "completed", res.message)
+      assert(res.stagedRows == 12 && res.processedRows == 14)
+      assert(jobs.get() <= JobBudget,
+        s"a warmed 12-row job ran ${jobs.get()} Spark jobs; budget $JobBudget")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a file with a blank study_id AND a junk quality_score fails on the study") {
+    val (pipe, _) = freshPipeline()
+    val both =
+      s"""${Fixtures.header}
+         |STUDYQ,P001,glucose,100.0,mg/dL,2024-03-04T08:00:00Z,SITE_X,abc
+         |,P002,glucose,100.0,mg/dL,2024-03-04T08:00:00Z,SITE_X,0.9
+         |""".stripMargin
+    val res = pipe.processJob("j-both", csv("both.csv", both))
+    assert(res.status == "failed")
+    assert(res.message.exists(_.contains("study_id is required")), res.message)
+  }
+
+  test("of two junk quality_scores the first in file order is named") {
+    val (pipe, _) = freshPipeline()
+    val two =
+      s"""${Fixtures.header}
+         |STUDYQ,P001,glucose,100.0,mg/dL,2024-03-04T08:00:00Z,SITE_X,0.9
+         |STUDYQ,P001,glucose,101.0,mg/dL,2024-03-05T08:00:00Z,SITE_X,first-junk
+         |STUDYQ,P002,glucose,102.0,mg/dL,2024-03-06T08:00:00Z,SITE_X,0.8
+         |STUDYQ,P002,glucose,103.0,mg/dL,2024-03-07T08:00:00Z,SITE_X,abc
+         |""".stripMargin
+    val res = pipe.processJob("j-two", csv("two.csv", two))
+    assert(res.status == "failed")
+    assert(res.message.contains("could not convert string to float: 'first-junk'"),
+      res.message)
+  }
+
+  test("quality report rows per fixture are the reference rule counts") {
+    val (pipe, wh) = freshPipeline()
+    val expected = Seq(
+      ("study001.csv", Fixtures.study001, Set.empty[(String, String, Long)]),
+      ("study002.csv", Fixtures.study002, Set.empty[(String, String, Long)]),
+      ("bad_bp.csv", Fixtures.badBp, Set(("malformed_blood_pressure", "error", 1L))),
+      ("oob_bp.csv", Fixtures.oobBp, Set(("malformed_blood_pressure", "error", 1L))),
+      ("missing_unit.csv", Fixtures.missingUnit, Set(("missing_unit_required", "warn", 1L))),
+      ("out_of_range.csv", Fixtures.outOfRange, Set(("numeric_out_of_range", "warn", 1L))),
+      ("twelve.csv", twelveRows, Set(("missing_unit_required", "warn", 2L),
+        ("malformed_blood_pressure", "error", 1L), ("numeric_out_of_range", "warn", 1L))))
+    expected.zipWithIndex.foreach { case ((name, content, _), i) =>
+      assert(pipe.processJob(s"q-$i", csv(name, content)).status == "completed", name)
+    }
+    val q = wh.read("data_quality_reports", Schemas.qualityReports).collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getString(2), r.getLong(3)))
+    expected.zipWithIndex.foreach { case ((name, content, rows), i) =>
+      assert(q.filter(_._1 == s"q-$i").map(_._2).toSet == rows, name)
+      // the fused input pass counts what one standalone rule pass counts
+      val standalone = Quality.check(spark, Ingest.readCsv(spark, csv(name, content)),
+        Quality.ReferenceRules, s"q-$i").collect()
+        .map(r => (r.getString(1), r.getString(2), r.getLong(3))).toSet
+      assert(standalone == rows, name)
+    }
+  }
+
+  test("agg merge rewrites exactly the studies with numeric rows") {
+    val (pipe, wh) = freshPipeline()
+    val first =
+      s"""${Fixtures.header}
+         |SA,P,glucose,100,mg/dL,2024-01-01T00:00:00Z,SITE_A,0.9
+         |SB,P,glucose,150,mg/dL,2024-01-01T00:00:00Z,SITE_B,0.9
+         |""".stripMargin
+    // SA arrives again with text values only: no aggregate row of SA
+    // changes, so its partition must not be rewritten; SB's must be
+    val second =
+      s"""${Fixtures.header}
+         |SA,P,note,fasting,,2024-01-02T00:00:00Z,SITE_A,0.9
+         |SB,P,glucose,50,mg/dL,2024-01-02T00:00:00Z,SITE_B,0.9
+         |""".stripMargin
+    pipe.processJob("j-1", csv("first.csv", first))
+    def filesOf(study: String): Map[String, java.nio.file.attribute.FileTime] = {
+      import scala.jdk.CollectionConverters._
+      val p = wh.currentDir("measurement_aggregations").get.resolve(s"study_id=$study")
+      java.nio.file.Files.walk(p).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => p.relativize(f).toString -> java.nio.file.Files.getLastModifiedTime(f))
+        .toMap
+    }
+    val (sa, sb) = (filesOf("SA"), filesOf("SB"))
+    assert(pipe.processJob("j-2", csv("second.csv", second)).status == "completed")
+    assert(filesOf("SA") == sa)
+    assert(filesOf("SB").keySet != sb.keySet)
+    val aggs = wh.read("measurement_aggregations", Schemas.aggregations)
+    assert(aggs.filter(col("study_id") === "SA").head().getAs[String]("job_id") == "j-1")
+    assert(aggs.filter(col("study_id") === "SB").head()
+      .getAs[java.math.BigDecimal]("min_num").doubleValue() == 50.0)
+  }
+
+  private def persistentRddIds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("a job failing mid-pipeline releases its cached input") {
+    val (pipe, wh) = freshPipeline()
+    // a regular file where the aggregates table belongs: the job fails in
+    // its last stage, after the cached input has been materialized
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(wh.root, "measurement_aggregations"), "not a table")
+    val before = persistentRddIds()
+    val res = pipe.processJob("j-fail", csv("study001.csv", Fixtures.study001))
+    assert(res.status == "failed")
+    assert(wh.read("staging_clinical_measurements", Schemas.staging).count() == 6)
+    assert(persistentRddIds() -- before == Set.empty)
+  }
+
+  test("a write failing inside appendIfAbsentMany releases every staged cache") {
+    import spark.implicits._
+    val wh = new Warehouse(spark, tmpDir("whleak").toString)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id INT, v INT")
+    val batch = (0 until 5).map(i => (i, 1)).toDF("id", "v")
+    val before = persistentRddIds()
+    // the staging count succeeds; b's write names a missing partition column
+    intercept[Exception] {
+      wh.appendIfAbsentMany(Seq(
+        wh.Append("a", schema, batch, Seq("id"), "id"),
+        wh.Append("b", schema, batch, Seq("id"), "id", partitionBy = Seq("missing"))))
+    }
+    assert(wh.read("a", schema).count() == 5)
+    assert(persistentRddIds() -- before == Set.empty)
+  }
 }
